@@ -57,6 +57,25 @@ object Pipeline {
       () => mvLayer(spark, sfDir, outDir))
   }
 
+  // Sink policy — every gold/warehouse sink calls the rollup's `…Of`
+  // core directly, which is where the two sink-only choices live:
+  //  - NO presentation sort. A table sink needs no total order; each
+  //    declared query's orderBy was a full range exchange + sort that
+  //    the write threw away (readers re-sort; q84's gate re-sorts its
+  //    read-back).
+  //  - FANNED scans (Tables.loadFanned, keyed on the rollup's group or
+  //    join key) for the five heaviest sinks. The testdata's files are
+  //    one row group each, so a plain scan is ONE task carrying the
+  //    whole expand + partial aggregate (or the fact's broadcast probe
+  //    + wide projection); under the branch concurrency below, that
+  //    task's execution-memory share is a fraction of the pool and it
+  //    spilled (mv_daily_revenue: ~264 MB, 23x its standalone CPU,
+  //    measured round 18). Results are identical — exact aggregates
+  //    are partition-order-insensitive. The round-17 blanket fan-out
+  //    was negative under FIFO scheduling; it measured positive once
+  //    FAIR pools removed the core contention.
+  // Declared queries keep the plain scan and their sort, so their
+  // plans are untouched (PlansSpec pins them).
   private def goldLayer(spark: SparkSession, sfDir: String,
                         outDir: String): Unit = {
 
@@ -72,21 +91,20 @@ object Pipeline {
     // empty window between truncate and load-complete; a snapshot
     // commit swaps atomically (readers see the old version until
     // _SUCCESS lands) and keeps history for time travel.
-    // UNORDERED variants for every commit: the declared queries keep
-    // their presentation sorts, but a table sink needs no total order
-    // and each orderBy here was a full range exchange + sort the
-    // commit threw away (readers re-sort; q84's gate re-sorts the
-    // read-back — guide §2.4, the q08 fact precedent from round 17).
     timed("gold") {
       inParallel(spark,
-        () => snapshotCommit(
-          gold.Enrich.ordersEnrichedFanned(spark, sfDir), s"$outDir/gold/orders_enriched"),
-        () => snapshotCommit(
-          gold.Summaries.dailySalesSummaryFanned(spark, sfDir), s"$outDir/gold/daily_sales_summary"),
-        () => snapshotCommit(
-          gold.Summaries.customerSegmentsUnordered(spark, sfDir), s"$outDir/gold/customer_segments"),
-        () => snapshotCommit(
-          gold.Summaries.productPerformanceFanned(spark, sfDir), s"$outDir/gold/product_performance"))
+        () => snapshotCommit(gold.Enrich.ordersEnrichedOf(spark, sfDir,
+            Tables.loadFanned(spark, sfDir, "lineitem", col("l_orderkey"))),
+          s"$outDir/gold/orders_enriched"),
+        () => snapshotCommit(gold.Summaries.dailySalesSummaryOf(
+            Tables.loadFanned(spark, sfDir, "orders", col("o_orderdate"))),
+          s"$outDir/gold/daily_sales_summary"),
+        () => snapshotCommit(gold.Summaries.customerSegmentsOf(
+            Tables.load(spark, sfDir, "orders")),
+          s"$outDir/gold/customer_segments"),
+        () => snapshotCommit(gold.Summaries.productPerformanceOf(spark, sfDir,
+            Tables.loadFanned(spark, sfDir, "lineitem", col("l_partkey"))),
+          s"$outDir/gold/product_performance"))
     }
   }
 
@@ -145,8 +163,10 @@ object Pipeline {
           // otherwise execute the whole dim-join child a second time
           // before the shuffle does (guide §2.4: don't recompute what
           // one pass already produced). Unpersisted in the finally —
-          // nothing outlives the run.
-          val factSrc = warehouse.Star.factOrderLinesFanned(spark, sfDir)
+          // nothing outlives the run. Fanned scan: sink policy above
+          // goldLayer.
+          val factSrc = warehouse.Star.factOrderLinesOf(spark, sfDir,
+              Tables.loadFanned(spark, sfDir, "lineitem", col("l_orderkey")))
             .withColumn("month_key",
               col("date_key").cast("int").divide(100).cast("int"))
             .persist()
@@ -181,9 +201,6 @@ object Pipeline {
                 df, factDir, Seq("month_key", "l_orderkey"),
                 Seq("l_orderkey")))
           }
-          // commit-phase attribution rides the metrics dump (dev seam)
-          sources.Snapshots.lastCommitPhases.foreach { case (k, v) =>
-            lastRunMetrics.put(s"fact_$k", v) }
           timed("fact_recent") {
           // recent slice: newest months resolved from the manifest —
           // collected ONCE; the max bound, the pruning decision and
@@ -219,14 +236,21 @@ object Pipeline {
   /** MV layer: rollups over the fact/base tables. */
   private def mvLayer(spark: SparkSession, sfDir: String,
                       outDir: String): Unit = {
-    // unordered cores, same rationale as the gold layer: a table sink
-    // needs no total order and each orderBy was a dead range exchange
+    // sink policy: see goldLayer
     timed("mv") {
       inParallel(spark,
-        () => write(warehouse.Views.mvDailyRevenueFanned(spark, sfDir), s"$outDir/warehouse/mv_daily_revenue"),
-        () => write(warehouse.Views.mvMonthlyRevenueUnordered(spark, sfDir), s"$outDir/warehouse/mv_monthly_revenue"),
-        () => write(warehouse.Views.mvNationRevenueUnordered(spark, sfDir), s"$outDir/warehouse/mv_nation_revenue"),
-        () => write(warehouse.Views.mvHourlyPatternUnordered(spark, sfDir), s"$outDir/warehouse/mv_hourly_pattern"))
+        () => write(warehouse.Views.mvDailyRevenueOf(
+            Tables.loadFanned(spark, sfDir, "lineitem", col("l_shipdate"))),
+          s"$outDir/warehouse/mv_daily_revenue"),
+        () => write(warehouse.Views.mvMonthlyRevenueOf(
+            Tables.load(spark, sfDir, "lineitem")),
+          s"$outDir/warehouse/mv_monthly_revenue"),
+        () => write(warehouse.Views.mvNationRevenueOf(spark, sfDir,
+            Tables.load(spark, sfDir, "lineitem")),
+          s"$outDir/warehouse/mv_nation_revenue"),
+        () => write(warehouse.Views.mvHourlyPatternOf(
+            Tables.load(spark, sfDir, "events")),
+          s"$outDir/warehouse/mv_hourly_pattern"))
     }
   }
 

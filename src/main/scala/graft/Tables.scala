@@ -109,11 +109,13 @@ object Tables {
     *
     * APPLY ONLY where the downstream per-row work dominates the
     * rebalance — explode + per-shingle/token hashing builders, vector
-    * slicing/dot fan-outs. Round-18 measurement: on plain aggregates
-    * and inside the already-concurrent q84 pipeline this HURT
-    * (q84 8.2→13.3 s, q15 0.19→0.38 s — extra exchange + 32-task
-    * stage overhead with no idle cores to soak up), so those sites
-    * deliberately do NOT use it.
+    * slicing/dot fan-outs, and the heaviest [[Pipeline]] sinks. Round
+    * 18 measured it HURTING plain declared aggregates (q15 0.19→0.38 s:
+    * extra exchange + 32-task stage overhead with no idle cores to
+    * soak up), so declared gold/warehouse queries never fan. Only
+    * Pipeline's sinks do — five of them, where a one-task scan under
+    * the pipeline's branch concurrency spilled (the sink policy is
+    * spelled out once, above `Pipeline.goldLayer`).
     *
     * Scale-honest by construction: the decision reads the PLANNED
     * split count, so a production table whose scan already yields ≥

@@ -214,7 +214,7 @@ case class RowPosBitmap(
   * `groupBy(file, word)` — it tripled the row count before the
   * aggregate and probed a string-keyed hash map once per PROBE
   * POSITION: ~13 CPU-seconds on the q84 fact commit's critical path
-  * (FactProbe stack samples: the fused Generate+hashAgg loop was the
+  * (round-18 stack samples: the fused Generate+hashAgg loop was the
   * top frame of the whole commit). This aggregate folds each row's
   * probe positions straight into a dense mBits-bit word array — one
   * group per file, 3 hashes + 3 bit-sets per row, no row expansion.

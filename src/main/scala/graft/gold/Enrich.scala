@@ -52,31 +52,14 @@ object Enrich {
     * then a wide typed projection with date parts, coalesce defaults
     * and a CASE band). */
   def ordersEnriched(spark: SparkSession, dir: String): DataFrame =
-    ordersEnrichedUnordered(spark, dir).orderBy(col("o_orderkey"))
+    ordersEnrichedOf(spark, dir, Tables.load(spark, dir, "lineitem"))
+      .orderBy(col("o_orderkey"))
 
-  /** [[ordersEnriched]] WITHOUT the gate's global presentation sort —
-    * for the q84 pipeline's snapshot write: a table sink doesn't need
-    * a total order, and the orderBy costs a full range exchange +
-    * sort of the widest gold projection that the commit throws away
-    * (the q08 factOrderLinesUnordered precedent, guide §2.4). The
-    * declared q01 query keeps its sort. */
-  def ordersEnrichedUnordered(spark: SparkSession, dir: String): DataFrame =
-    ordersEnrichedCore(spark, dir, Tables.load(spark, dir, "lineitem"))
-
-  /** The pipeline-sink variant: SAME joins/projection, but the
-    * lineitem rollup input is key-fanned — the rollup's
-    * expand+partial-aggregate (~600k (orderkey, partkey) groups)
-    * otherwise rides the testdata's one-row-group scan task, which
-    * under q84's branch concurrency is starved of execution memory
-    * (the mv_daily spill class, round 18). Result-identical (same
-    * core; exact aggregates are partition-order-insensitive);
-    * declared q01/q06 keep the plain scan and their plans. */
-  def ordersEnrichedFanned(spark: SparkSession, dir: String): DataFrame =
-    ordersEnrichedCore(spark, dir,
-      Tables.loadFanned(spark, dir, "lineitem", col("l_orderkey")))
-
-  private def ordersEnrichedCore(spark: SparkSession, dir: String,
-                                 lineitem: DataFrame): DataFrame = {
+  /** The [[ordersEnriched]] rollup over a caller-supplied lineitem
+    * frame, unsorted; orders and the geo dimensions still load from
+    * `dir`. */
+  def ordersEnrichedOf(spark: SparkSession, dir: String,
+                       lineitem: DataFrame): DataFrame = {
     val orders   = Tables.load(spark, dir, "orders")
     val customer = Tables.load(spark, dir, "customer")
     val nation   = Tables.load(spark, dir, "nation")

@@ -49,23 +49,12 @@ object Summaries {
   /** A3 + O1: daily sales summary grouped on a derived date string,
     * globally sorted (reference: spark/batch_gold.py:168-180). */
   def dailySalesSummary(spark: SparkSession, dir: String): DataFrame =
-    dailySalesSummaryUnordered(spark, dir).orderBy(col("order_date"))
+    dailySalesSummaryOf(Tables.load(spark, dir, "orders"))
+      .orderBy(col("order_date"))
 
-  /** [[dailySalesSummary]] without the presentation sort — the q84
-    * pipeline's snapshot write re-reads and re-sorts downstream, so
-    * the sink-side global sort is a dead exchange (guide §2.4; the
-    * declared q03 query keeps its sort). */
-  def dailySalesSummaryUnordered(spark: SparkSession, dir: String): DataFrame =
-    dailySalesSummaryCore(Tables.load(spark, dir, "orders"))
-
-  /** Pipeline-sink variant over a key-fanned orders scan (the
-    * mv_daily spill class — see [[graft.warehouse.Views
-    * .mvDailyRevenueFanned]]); declared q03 keeps the plain scan. */
-  def dailySalesSummaryFanned(spark: SparkSession, dir: String): DataFrame =
-    dailySalesSummaryCore(
-      Tables.loadFanned(spark, dir, "orders", col("o_orderdate")))
-
-  private def dailySalesSummaryCore(orders: DataFrame): DataFrame =
+  /** The [[dailySalesSummary]] rollup over a caller-supplied orders
+    * frame, unsorted — the caller picks the scan and the order. */
+  def dailySalesSummaryOf(orders: DataFrame): DataFrame =
     orders
       .groupBy(date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"))
       .agg(
@@ -87,13 +76,12 @@ object Summaries {
     * exactly like the reference (spark/batch_gold.py:195), then feeds
     * datediff inside the per-customer aggregate (:197-216). */
   def customerSegments(spark: SparkSession, dir: String): DataFrame =
-    customerSegmentsUnordered(spark, dir).orderBy(col("o_custkey"))
+    customerSegmentsOf(Tables.load(spark, dir, "orders"))
+      .orderBy(col("o_custkey"))
 
-  /** [[customerSegments]] without the presentation sort (the q84
-    * pipeline's table write — same rationale as
-    * [[dailySalesSummaryUnordered]]). */
-  def customerSegmentsUnordered(spark: SparkSession, dir: String): DataFrame = {
-    val orders = Tables.load(spark, dir, "orders")
+  /** The [[customerSegments]] rollup over a caller-supplied orders
+    * frame, unsorted. */
+  def customerSegmentsOf(orders: DataFrame): DataFrame = {
     // string-typed scalar round-trip: o_orderdate is TIMESTAMP_NTZ in
     // Spark 4 (parquet isAdjustedToUTC=false), so head() yields a
     // LocalDateTime; the ISO date string is max-monotonic and avoids
@@ -139,22 +127,13 @@ object Summaries {
     * part is the small side: Catalyst/AQE broadcasts it under the default
     * threshold; at 100 TB it stays orders of magnitude below lineitem. */
   def productPerformance(spark: SparkSession, dir: String): DataFrame =
-    productPerformanceUnordered(spark, dir).orderBy(col("product_id"))
+    productPerformanceOf(spark, dir, Tables.load(spark, dir, "lineitem"))
+      .orderBy(col("product_id"))
 
-  /** [[productPerformance]] without the presentation sort (the q84
-    * pipeline's table write — same rationale as
-    * [[dailySalesSummaryUnordered]]). */
-  def productPerformanceUnordered(spark: SparkSession, dir: String): DataFrame =
-    productPerformanceCore(spark, dir, Tables.load(spark, dir, "lineitem"))
-
-  /** Pipeline-sink variant over a key-fanned lineitem scan (the
-    * mv_daily spill class); declared q05 keeps the plain scan. */
-  def productPerformanceFanned(spark: SparkSession, dir: String): DataFrame =
-    productPerformanceCore(spark, dir,
-      Tables.loadFanned(spark, dir, "lineitem", col("l_partkey")))
-
-  private def productPerformanceCore(spark: SparkSession, dir: String,
-                                     li: DataFrame): DataFrame = {
+  /** The [[productPerformance]] rollup over a caller-supplied lineitem
+    * frame, unsorted; the part dimension still loads from `dir`. */
+  def productPerformanceOf(spark: SparkSession, dir: String,
+                           li: DataFrame): DataFrame = {
     val part = Tables.load(spark, dir, "part")
     val agg = li.groupBy(col("l_partkey"))
       .agg(

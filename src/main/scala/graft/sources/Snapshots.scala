@@ -154,20 +154,6 @@ object Snapshots {
     * manifest so readers probe with the writer's geometry — the
     * manifest grows linearly in files either way, metadata not
     * data. */
-  /** Dev seam: wall ms per phase of the LAST [[commitWithStats]] call
-    * (data write / footer pass / sidecar jobs) — commit-path
-    * attribution without a listener. Overwritten per call. */
-  private[graft] val lastCommitPhases:
-      collection.concurrent.TrieMap[String, Long] =
-    collection.concurrent.TrieMap.empty
-
-  private def phased[A](name: String)(body: => A): A = {
-    val t0 = System.nanoTime()
-    val r = body
-    lastCommitPhases.put(name, (System.nanoTime() - t0) / 1000000)
-    r
-  }
-
   def commitWithStats(df: DataFrame, tableDir: String,
                       statsCols: Seq[String], bloomCols: Seq[String]): Int = {
     require(statsCols.nonEmpty, "statsCols must name at least one column")
@@ -182,11 +168,9 @@ object Snapshots {
     // true with no stats manifest — readers would observe a committed
     // version that readPruned cannot serve. Write options land on the
     // job's hadoop conf, so the suppression is per-write, not global.
-    phased("data_write_ms") {
-      df.write.mode(SaveMode.Append)
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .parquet(dir)
-    }
+    df.write.mode(SaveMode.Append)
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(dir)
     onDataBeforeStats()
     import org.apache.spark.sql.functions._
     val spark = df.sparkSession
@@ -198,8 +182,7 @@ object Snapshots {
     // bit-identical to the old scan-derived one (SnapshotsSpec). A
     // commit whose stats columns aren't integral — or whose footers
     // lack stats — falls back to the original one-scan aggregation.
-    val fromFooters =
-      phased("footer_ms")(footerStats(spark, dir, statsCols))
+    val fromFooters = footerStats(spark, dir, statsCols)
     def writeStatsManifest(): Unit = fromFooters match {
       case Some(rows) =>
         val schema = org.apache.spark.sql.types.StructType(
@@ -249,7 +232,7 @@ object Snapshots {
       // the old explode(positions)+groupBy(file, word) tripled the
       // row count and probed a string-keyed hash agg per PROBE
       // POSITION — ~13 CPU-seconds on the q84 fact commit (round 18
-      // FactProbe samples). The aggregate folds each key's positions
+      // stack samples). The aggregate folds each key's positions
       // into the dense word array directly; posexplode + bits≠0
       // reproduces EXACTLY the sparse (file, word, bits) rows the old
       // plan emitted (a word row existed iff some key set a bit in
@@ -271,7 +254,6 @@ object Snapshots {
         .coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/$BloomDir")
     }
-    phased("sidecars_ms") {
     if (bloomCols.isEmpty) writeStatsManifest()
     else if (fromFooters.isEmpty) {
       // fallback path: the bloom sizes itself from the stats manifest
@@ -285,7 +267,6 @@ object Snapshots {
       // q84 critical path for no data reason; _SUCCESS still lands
       // only after BOTH complete, so the visibility contract holds)
       concurrently(writeStatsManifest(), writeBloomManifest())
-    }
     }
     onStatsBeforePublish()
     LogStore.current.claimMarker(

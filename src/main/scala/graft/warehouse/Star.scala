@@ -37,29 +37,15 @@ object Star {
     * l_orderkey (or bucketed co-location); the hint here reproduces the
     * reference's stated plan at its own scale. */
   def factOrderLines(spark: SparkSession, dir: String): DataFrame =
-    factOrderLinesUnordered(spark, dir)
+    factOrderLinesOf(spark, dir, Tables.load(spark, dir, "lineitem"))
       .orderBy(col("l_orderkey"), col("l_linenumber"))
 
-  /** The fact rows WITHOUT the q08 gate's global presentation sort —
-    * for writers that immediately re-cluster (the q84 pipeline's
-    * range-partitioned fact layout): a global sort feeding a
-    * repartitionByRange is a full extra shuffle+sort the next exchange
-    * throws away, and the optimizer can't remove it across the
-    * pipeline's persist boundary (round 17, guide §2.4). */
-  def factOrderLinesUnordered(spark: SparkSession, dir: String): DataFrame =
-    factOrderLinesCore(spark, dir, Tables.load(spark, dir, "lineitem"))
-
-  /** Pipeline-sink variant: SAME join/projection over a key-fanned
-    * lineitem scan — the broadcast probe + wide projection of 600k
-    * rows otherwise ride the testdata's one-row-group scan task under
-    * q84's branch concurrency (the mv_daily spill class, round 18).
-    * Result-identical; declared q08 keeps the plain scan and plan. */
-  def factOrderLinesFanned(spark: SparkSession, dir: String): DataFrame =
-    factOrderLinesCore(spark, dir,
-      Tables.loadFanned(spark, dir, "lineitem", col("l_orderkey")))
-
-  private def factOrderLinesCore(spark: SparkSession, dir: String,
-                                 li: DataFrame): DataFrame = {
+  /** The [[factOrderLines]] rows over a caller-supplied lineitem frame,
+    * unsorted — for writers that re-cluster the fact themselves (a
+    * global sort feeding a repartitionByRange is a full shuffle + sort
+    * the next exchange throws away); orders still loads from `dir`. */
+  def factOrderLinesOf(spark: SparkSession, dir: String,
+                       li: DataFrame): DataFrame = {
     val orders = Tables.load(spark, dir, "orders")
     li.join(broadcast(orders), li("l_orderkey") === orders("o_orderkey"), "left")
       .select(

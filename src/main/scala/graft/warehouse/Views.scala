@@ -21,34 +21,12 @@ object Views {
 
   /** A9: daily rollup (04_materialized_views.sql:11-25). */
   def mvDailyRevenue(spark: SparkSession, dir: String): DataFrame =
-    mvDailyRevenueUnordered(spark, dir).orderBy(col("ship_date"))
+    mvDailyRevenueOf(Tables.load(spark, dir, "lineitem"))
+      .orderBy(col("ship_date"))
 
-  /** [[mvDailyRevenue]] without the presentation sort — the q84
-    * pipeline's MV writes need no total order (readers re-sort), and
-    * each sink-side orderBy was a dead range exchange (guide §2.4,
-    * the gold-layer precedent; declared q14 keeps its sort). */
-  def mvDailyRevenueUnordered(spark: SparkSession, dir: String): DataFrame =
-    mvDailyRevenueCore(Tables.load(spark, dir, "lineitem"))
-
-  /** The pipeline-sink variant: SAME aggregate over a key-fanned scan.
-    * The two-countDistinct expand triples the row count before the
-    * partial aggregate, and on the testdata's one-row-group scan that
-    * whole ~1M-group hash map rides ONE task — under the pipeline's
-    * branch concurrency its execution-memory share is a fraction of
-    * the pool and the task SPILLS (~264 MB measured round 18, 23× the
-    * standalone CPU). Fanning the scan 32 ways splits the map below
-    * every task's share. Result-identical by construction (same
-    * [[mvDailyRevenueCore]]; exact count/distinct/decimal aggregates
-    * are partition-order-insensitive); declared q14 keeps the plain
-    * scan and its unchanged plan. The round-17 blanket fan-out retest
-    * was negative under FIFO scheduling — re-measured positive after
-    * the FAIR-pool + cheap-bloom changes removed the core contention
-    * that made the extra exchange a loss. */
-  def mvDailyRevenueFanned(spark: SparkSession, dir: String): DataFrame =
-    mvDailyRevenueCore(
-      Tables.loadFanned(spark, dir, "lineitem", col("l_shipdate")))
-
-  private def mvDailyRevenueCore(li: DataFrame): DataFrame =
+  /** The [[mvDailyRevenue]] rollup over a caller-supplied lineitem
+    * frame, unsorted — the caller picks the scan and the order. */
+  def mvDailyRevenueOf(li: DataFrame): DataFrame =
     li.groupBy(date_format(col("l_shipdate"), "yyyy-MM-dd").as("ship_date"))
       .agg(
         count(lit(1)).as("line_count"),
@@ -68,14 +46,13 @@ object Views {
 
   /** A10: monthly rollup (04_materialized_views.sql:30-42). */
   def mvMonthlyRevenue(spark: SparkSession, dir: String): DataFrame =
-    mvMonthlyRevenueUnordered(spark, dir)
+    mvMonthlyRevenueOf(Tables.load(spark, dir, "lineitem"))
       .orderBy(col("ship_year"), col("ship_month"))
 
-  /** Unordered core for the pipeline write (see
-    * [[mvDailyRevenueUnordered]]). */
-  def mvMonthlyRevenueUnordered(spark: SparkSession, dir: String): DataFrame =
-    Tables.load(spark, dir, "lineitem")
-      .groupBy(year(col("l_shipdate")).as("ship_year"),
+  /** The [[mvMonthlyRevenue]] rollup over a caller-supplied lineitem
+    * frame, unsorted. */
+  def mvMonthlyRevenueOf(li: DataFrame): DataFrame =
+    li.groupBy(year(col("l_shipdate")).as("ship_year"),
         month(col("l_shipdate")).as("ship_month"))
       .agg(
         count(lit(1)).as("line_count"),
@@ -94,12 +71,13 @@ object Views {
     * revenue by supplier nation (04_materialized_views.sql:64-76
     * sales-by-state analog). supplier and nation broadcast. */
   def mvNationRevenue(spark: SparkSession, dir: String): DataFrame =
-    mvNationRevenueUnordered(spark, dir).orderBy(col("nation_name"))
+    mvNationRevenueOf(spark, dir, Tables.load(spark, dir, "lineitem"))
+      .orderBy(col("nation_name"))
 
-  /** Unordered core for the pipeline write (see
-    * [[mvDailyRevenueUnordered]]). */
-  def mvNationRevenueUnordered(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.load(spark, dir, "lineitem")
+  /** The [[mvNationRevenue]] rollup over a caller-supplied lineitem
+    * frame, unsorted; supplier and nation still load from `dir`. */
+  def mvNationRevenueOf(spark: SparkSession, dir: String,
+                        li: DataFrame): DataFrame = {
     val supplier = Tables.load(spark, dir, "supplier")
     val nation = Tables.load(spark, dir, "nation")
     li.join(broadcast(supplier), li("l_suppkey") === supplier("s_suppkey"), "left")
@@ -127,14 +105,13 @@ object Views {
     * flag (04_materialized_views.sql:117-126). Spark dayofweek is Sun=1;
     * the oracle normalizes DuckDB's Sun=0 (SURVEY §7.4). */
   def mvHourlyPattern(spark: SparkSession, dir: String): DataFrame =
-    mvHourlyPatternUnordered(spark, dir)
+    mvHourlyPatternOf(Tables.load(spark, dir, "events"))
       .orderBy(col("event_hour"), col("event_dow"))
 
-  /** Unordered core for the pipeline write (see
-    * [[mvDailyRevenueUnordered]]). */
-  def mvHourlyPatternUnordered(spark: SparkSession, dir: String): DataFrame =
-    Tables.load(spark, dir, "events")
-      .groupBy(hour(col("ts")).as("event_hour"),
+  /** The [[mvHourlyPattern]] rollup over a caller-supplied events
+    * frame, unsorted. */
+  def mvHourlyPatternOf(events: DataFrame): DataFrame =
+    events.groupBy(hour(col("ts")).as("event_hour"),
         dayofweek(col("ts")).as("event_dow"))
       .agg(
         count(lit(1)).as("event_count"),

@@ -7,10 +7,15 @@ import java.nio.file.Files
   * partitioned monthly). */
 class PipelineSpec extends SparkSuite {
 
-  test("pipeline writes all layers with expected layouts and rows") {
-    val out = Files.createTempDirectory("pipeline_out").toString
-    Pipeline.run(spark, sfDir, out)
+  /** One pipeline output shared by the specs below; the first to touch
+    * it runs the pipeline. */
+  private lazy val out: String = {
+    val o = Files.createTempDirectory("pipeline_out").toString
+    Pipeline.run(spark, sfDir, o)
+    o
+  }
 
+  test("pipeline writes all layers with expected layouts and rows") {
     val tables = Seq(
       "bronze/events", "silver/events_state",
       "warehouse/dim_customer", "warehouse/dim_order_status",
@@ -132,5 +137,37 @@ class PipelineSpec extends SparkSuite {
     assert(metrics("events_state") ==
       spark.read.parquet(s"$out/silver/events_state").count())
     assert(metrics.get("mv_daily_revenue").exists(_ > 0))
+  }
+
+  test("every gold/warehouse sink holds exactly its declared query's rows") {
+    // the sinks call the rollup cores with their own scan (fanned or
+    // plain) and no sort; as multisets they must equal the declared
+    // queries, which use the plain scan and sort
+    def snapshot(t: String) = sources.Snapshots.read(spark, s"$out/$t")
+    def parquet(t: String) = spark.read.parquet(s"$out/$t")
+    val pairs = Seq(
+      ("gold/orders_enriched", snapshot _, "q06_orders_enriched"),
+      ("gold/daily_sales_summary", snapshot _, "q03_daily_sales_summary"),
+      ("gold/customer_segments", snapshot _, "q04_customer_segments"),
+      ("gold/product_performance", snapshot _, "q05_product_performance"),
+      ("warehouse/fact_order_lines",
+        (t: String) => snapshot(t).drop("month_key"), "q08_fact_order_lines"),
+      ("warehouse/mv_daily_revenue", parquet _, "q14_mv_daily_revenue"),
+      ("warehouse/mv_monthly_revenue", parquet _, "q15_mv_monthly_revenue"),
+      ("warehouse/mv_nation_revenue", parquet _, "q16_mv_nation_revenue"),
+      ("warehouse/mv_hourly_pattern", parquet _, "q17_mv_hourly_pattern"),
+      ("warehouse/dim_time", parquet _, "q18_dim_time"),
+      ("warehouse/dim_order_status", parquet _, "q19_dim_order_status"),
+      ("warehouse/dim_customer", parquet _, "q27_dim_customer"))
+    pairs.foreach { case (t, read, q) =>
+      val declared = SparkEntry.queries(q)(spark, sfDir)
+      val sink = read(t)
+      assert(sink.columns.toSet == declared.columns.toSet,
+        s"$t columns ${sink.columns.mkString(",")} vs $q")
+      val aligned = sink.select(declared.columns.map(sink.col): _*)
+      assert(declared.count() > 0, s"$q is empty")
+      assert(aligned.exceptAll(declared).isEmpty &&
+        declared.exceptAll(aligned).isEmpty, s"$t diverges from $q")
+    }
   }
 }

@@ -468,4 +468,32 @@ class PlansSpec extends SparkSuite {
     exchanges.foreach(k => assert(k.contains("source"),
       s"q92 exchange keyed off-source ($k):\n$p"))
   }
+
+  test("declared gold/warehouse plans match their plans/r18 dumps") {
+    // the full formatted plans, not a substring: the declared queries
+    // share their rollup cores with Pipeline's sinks, and a sink-side
+    // choice (fanned scan, no sort) must never leak into them. Expression
+    // and exchange ids differ per session, so they are masked; blank
+    // lines were stripped from the committed dumps. Spark numbers the
+    // groups of a multi-distinct aggregate (Expand's `gid`, q14) in the
+    // hash order of their expression ids, which depends on what ran
+    // earlier in the JVM, so lines carrying `gid` compare as token
+    // multisets and every other line exactly. A fresh session keeps
+    // SQL conf set by other specs out of the plans.
+    val s = spark.newSession()
+    def norm(p: String): Seq[String] = p.linesIterator.filter(_.trim.nonEmpty)
+      .map(_.replaceAll("#\\d+L?", "#").replaceAll("plan_id=\\d+", "plan_id="))
+      .map(l => if (!l.contains("gid#")) l
+        else "\\w+|[^\\w\\s]".r.findAllIn(l).toSeq.sorted.mkString(" "))
+      .toSeq
+    for (q <- Seq("q03_daily_sales_summary", "q06_orders_enriched",
+        "q08_fact_order_lines", "q14_mv_daily_revenue",
+        "q16_mv_nation_revenue")) {
+      val got = SparkEntry.queries(q)(s, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      val want = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"plans/r18/${q}_after.txt")), "UTF-8")
+      assert(norm(got) == norm(want), s"$q plan drifted from plans/r18:\n$got")
+    }
+  }
 }
